@@ -102,8 +102,18 @@ def _band_explode(bands: int):
                                                  b * r + 1, r)))))
 
 
+class BandKeys(list):
+    """Sorted band keys (a plain ``list[int]``) tagged with the band
+    count they were collected at, so a probe can refuse keys banded
+    differently from its table."""
+
+    def __init__(self, keys, bands: int):
+        super().__init__(keys)
+        self.bands = bands
+
+
 def collect_band_keys(sigs: DataFrame, bands: int,
-                      id_col: str = "doc_id") -> list[int]:
+                      id_col: str = "doc_id") -> BandKeys:
     """Distinct ``xxhash64(band_idx, band_hash)`` values of a batch's
     band relation, collected to the driver — the band-key fingerprints
     from which the banded probe derives its touched-bucket list for
@@ -122,13 +132,14 @@ def collect_band_keys(sigs: DataFrame, bands: int,
     computed at the probed table's meta ``bands`` and over the exact
     batch signatures the probe receives — the same agreement contract
     as ``new_sigs``/``num_perm`` (a mismatch changes the candidate
-    set); pass ``sigs`` LAZY-cut and this collect doubles as its
+    set, so the probe raises on keys tagged with another ``bands``);
+    pass ``sigs`` LAZY-cut and this collect doubles as its
     materializing action."""
     rows = (sigs.select(
         id_col, _band_explode(bands).alias("band_idx", "band_hash"))
         .select(F.xxhash64("band_idx", "band_hash").alias("k"))
         .distinct().collect())
-    return sorted(r["k"] for r in rows)
+    return BandKeys(sorted(r["k"] for r in rows), bands)
 
 
 def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
@@ -297,9 +308,12 @@ def simhash64(tokens_col: Column) -> Column:
 
 def simhash_near_dups(df: DataFrame, id_col: str, tokens_col: Column,
                       max_hamming: int = 8) -> DataFrame:
-    """Near-dup pairs by SimHash: block on 16-bit quarters (a pair
-    within hamming ≤ 3·16 shares ≥1 exact quarter by pigeonhole — for
-    max_hamming ≤ 8 recall is high in practice), verify by popcount.
+    """Near-dup pairs by SimHash: block on 16-bit quarters, verify by
+    popcount. Pigeonhole guarantees a shared exact quarter only for
+    pairs within hamming ≤ 3 (four differing bits can hit all four
+    quarters), so recall up to the default ``max_hamming=8`` is NOT
+    guaranteed: a pair that differs in every quarter is never a
+    candidate. Exact recall at distance h needs h+1 blocks.
 
     ``bit_count(a XOR b)`` is the exact hamming distance; the quarter
     blocking keeps the self-join linear-ish instead of quadratic.
@@ -1056,7 +1070,7 @@ def incremental_minhash_candidates_banded(
         materialize: bool = True,
         max_candidates_per_new: int | None = None,
         new_sigs: DataFrame | None = None,
-        new_band_keys: list[int] | None = None) -> DataFrame:
+        new_band_keys: BandKeys | None = None) -> DataFrame:
     """Pruned probe of the band-partitioned signature table: near-dup
     candidates (new_id, old_id, est_jaccard) of a NEW batch against
     the persisted corpus, reading ONLY
@@ -1128,7 +1142,8 @@ def incremental_minhash_candidates_banded(
     job; band keys are ``n_buckets``-independent, so one collect
     serves probes across geometry migrations. Same agreement contract
     as ``new_sigs``: the keys MUST be the batch's own at the table's
-    ``bands``, or the pruned scan silently misses buckets.
+    ``bands``, or the pruned scan silently misses buckets — keys
+    collected at another band count raise ``ValueError``.
 
     ``new_sigs``: optional PRE-COMPUTED batch signatures — a
     materialized (``id_col``, sig) relation exactly as
@@ -1158,6 +1173,12 @@ def incremental_minhash_candidates_banded(
     meta = _read_sig_meta(path)
     num_perm, bands = meta["num_perm"], meta["bands"]
     n_buckets = meta["n_buckets"]
+    keys_bands = getattr(new_band_keys, "bands", None)
+    if new_band_keys is not None and keys_bands != bands:
+        raise ValueError(
+            f"new_band_keys were collected at bands={keys_bands} but the "
+            f"table at {path} has bands={bands}; collect them with "
+            "collect_band_keys(sigs, _read_sig_meta(path)['bands'])")
     if max_batch_id_exclusive is not None and not meta["keyed"]:
         raise ValueError(
             f"table at {path} is not batch_id-keyed; "

@@ -164,11 +164,16 @@ def multiset_diff_count(a, b, alias: str, one_way: bool = False):
     exchange of each input instead of two, and one plan branch
     instead of two for AQE to materialize)."""
     cols = list(a.columns)
-    tagged = (a.select(*cols, F.lit(1).alias("__sgn"))
-              .unionAll(b.select(*cols, F.lit(-1).alias("__sgn"))))
-    per_val = tagged.groupBy(*cols).agg(F.sum("__sgn").alias("__d"))
-    mag = (F.greatest(F.col("__d"), F.lit(0)) if one_way
-           else F.abs(F.col("__d")))
+    # helper columns named apart from every input column: a collision
+    # would group by (or sum) the caller's column instead
+    sgn, d = "__sgn", "__d"
+    while sgn in cols or d in cols:
+        sgn, d = "_" + sgn, "_" + d
+    tagged = (a.select(*cols, F.lit(1).alias(sgn))
+              .unionAll(b.select(*cols, F.lit(-1).alias(sgn))))
+    per_val = tagged.groupBy(*cols).agg(F.sum(sgn).alias(d))
+    mag = (F.greatest(F.col(d), F.lit(0)) if one_way
+           else F.abs(F.col(d)))
     return per_val.agg(F.coalesce(F.sum(mag), F.lit(0))
                        .cast("long").alias(alias))
 

@@ -429,11 +429,12 @@ def ann_topk_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_IDX_ORACLE,
     doc=(
         "IVF ANN against the PERSISTED inverted file (write_ivf_index "
-        "+ ivf_topk_from_index): the probe is a dynamic-partition-"
-        "pruned read of the nprobe probed lists — the LAYOUT skips "
-        "1-nprobe/nlist of the data — and must equal the direct "
-        "ivf_topk under the same centroids exactly, pinned TRUE "
-        "beside DuckDB's corpus-count anchor."
+        "+ ivf_topk_from_index): the probe is a partition-pruned read "
+        "of the UNION of the batch's probed lists — about "
+        "1-(1-nprobe/nlist)^Q of them for Q queries, not nprobe/nlist "
+        "— and must equal the direct ivf_topk under the same "
+        "centroids exactly, pinned TRUE beside DuckDB's corpus-count "
+        "anchor."
     ),
 )
 def ann_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1044,7 +1045,8 @@ def signature_table_maintenance(spark: SparkSession,
     # after the 16→64 growth migration (r13 optimization,
     # value-identity pinned in tests/test_dedup.py)
     batch_sigs = cut_lineage(minhash_signatures(batch), eager=False)
-    band_keys = collect_band_keys(batch_sigs, 16)
+    band_keys = collect_band_keys(batch_sigs,
+                                  _read_sig_meta(path)["bands"])
 
     def probe():
         # cut_lineage, not persist: probe results are HELD ACROSS
@@ -1184,7 +1186,7 @@ def probe_admission_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     from ..functions.text import shingle3_udf
-    from ..operators.dedup import (collect_band_keys,
+    from ..operators.dedup import (_read_sig_meta, collect_band_keys,
                                    incremental_minhash_candidates_banded,
                                    minhash_signatures,
                                    write_banded_signature_table)
@@ -1228,7 +1230,8 @@ def probe_admission_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cap never enters the banding, so the collected keys
     # replace both probes' touched-bucket jobs (r13 optimization)
     batch_sigs = cut_lineage(minhash_signatures(batch), eager=False)
-    band_keys = collect_band_keys(batch_sigs, 16)
+    band_keys = collect_band_keys(batch_sigs,
+                                  _read_sig_meta(path)["bands"])
     unc = incremental_minhash_candidates_banded(
         spark, path, batch, new_sigs=batch_sigs,
         new_band_keys=band_keys) \
@@ -1367,7 +1370,8 @@ def signature_table_rebucket(spark: SparkSession,
     # including across the 16→48 migration — band keys are
     # n_buckets-independent (r13 optimization)
     batch_sigs = cut_lineage(minhash_signatures(batch), eager=False)
-    band_keys = collect_band_keys(batch_sigs, 16)
+    band_keys = collect_band_keys(batch_sigs,
+                                  _read_sig_meta(path)["bands"])
 
     def probe():
         # cut_lineage, not persist: a probe result HELD ACROSS a

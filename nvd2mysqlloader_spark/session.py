@@ -15,16 +15,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Local parallelism: SPARK_GRAFT_CPUS when set, else the cores this
+    process may run on (its affinity mask, not the machine's count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(app_name: str = "nvd2mysqlloader_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
     ``shuffle_partitions`` defaults to the local parallelism
-    (SPARK_GRAFT_CPUS or 32).  At 100 TB on a real cluster this knob is
+    (:func:`default_cpus`).  At 100 TB on a real cluster this knob is
     instead set to ~2-3x total executor cores and AQE coalesces down;
     the configs below are identical either way.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (
@@ -50,6 +57,15 @@ def get_spark(app_name: str = "nvd2mysqlloader_spark",
         # are noise there, not signal
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # list partition dirs on the driver, never as a Spark job: past
+        # 32 dirs (the default) Spark "parallelizes" the listing, but in
+        # local mode that job runs on the same JVM against the same
+        # disk, so it only adds scheduling. On a 4-core host the
+        # listing job cost 0.3-0.7 s per read of a 64-list IVF index,
+        # and a banded-signature probe over 5,120 bucket dirs fell from
+        # 3.4 s to 2.0 s without it.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(2**31 - 1))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

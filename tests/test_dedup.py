@@ -636,6 +636,60 @@ def test_ivf_index_probe_matches_direct(spark, tmp_path):
         write_ivf_index(emb, path, nlist=32)
 
 
+def test_ivf_index_probe_resolves_metadata_on_driver(spark, tmp_path):
+    """The persisted-index probe reads its metadata on the driver: at
+    nlist=64 (past Spark's 32-dir parallel-listing default) neither
+    building nor running the probe schedules a listing or schema-
+    inference job (both run inside the reader call, whose stages are
+    named "parquet at ...") or a centroid collect (a "collect at"
+    stage from similarity.py). Rows still equal ivf_topk under the
+    same centroids; an empty batch gives an empty, typed result; a
+    missing index raises."""
+    import pandas as pd
+
+    from nvd2mysqlloader_spark.operators.similarity import (
+        ivf_topk, ivf_topk_from_index, write_ivf_index)
+
+    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
+    rows = emb.filter(F.col("vec_id") < 5).select("vec_id",
+                                                  "embedding").collect()
+    # a driver-local batch: collecting it runs no job, so every job
+    # below belongs to the probe itself
+    queries = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [r[0] for r in rows],
+         "embedding": [list(r[1]) for r in rows]}))
+    path = str(tmp_path / "ivf64")
+    cents = write_ivf_index(emb, path, nlist=64)
+    assert len(cents) == 64
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf_probe", "persisted IVF probe")
+    try:
+        df = ivf_topk_from_index(path, queries, k=10, nprobe=4)
+        probed = sorted(map(tuple, df.collect()))
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("ivf_probe")
+    names = [tracker.getStageInfo(s).name for j in jobs
+             for s in tracker.getJobInfo(j).stageIds]
+    metadata = [n for n in names if n.startswith("parquet at")
+                or "similarity.py" in n]
+    assert not metadata, names
+    assert 0 < len(jobs) <= 3, names
+
+    direct = sorted(map(tuple, ivf_topk(
+        emb, queries, k=10, nlist=64, nprobe=4,
+        centroids=cents).collect()))
+    assert probed == direct and len(direct) == 50
+
+    empty = ivf_topk_from_index(
+        path, spark.createDataFrame([], queries.schema), k=10, nprobe=4)
+    assert empty.collect() == [] and empty.dtypes == df.dtypes
+    with pytest.raises(ValueError, match="no index"):
+        ivf_topk_from_index(str(tmp_path / "missing"), queries)
+
+
 def test_ivf_index_probe_plan_partition_prunes(spark, tmp_path):
     """The IVF index's 100 TB claim pinned in the plan: the probe's
     broadcast join against the query's nprobe list ids must plant a
@@ -1942,3 +1996,25 @@ def test_probe_band_keys_identical_across_geometries(
     assert _probe(new_band_keys=keys) == want
     rebucket_signature_table(spark, path, 48)   # keys survive migration
     assert _probe(new_band_keys=keys) == _probe() == want
+
+
+def test_probe_refuses_band_keys_of_another_band_count(spark,
+                                                       banded_split):
+    """Band keys collected at a band count other than the table's
+    would prune the probe to the wrong buckets and silently miss
+    candidates: the probe refuses them, and untagged key lists."""
+    from nvd2mysqlloader_spark.operators.dedup import (
+        _read_sig_meta, collect_band_keys,
+        incremental_minhash_candidates_banded, minhash_signatures)
+
+    _old, new, path = banded_split
+    bands = _read_sig_meta(path)["bands"]
+    sigs = minhash_signatures(new).localCheckpoint(eager=True)
+    for keys in (collect_band_keys(sigs, bands // 2),
+                 list(collect_band_keys(sigs, bands))):
+        with pytest.raises(ValueError, match=f"bands={bands}"):
+            incremental_minhash_candidates_banded(
+                spark, path, new, new_sigs=sigs, new_band_keys=keys)
+    incremental_minhash_candidates_banded(
+        spark, path, new, new_sigs=sigs,
+        new_band_keys=collect_band_keys(sigs, bands))

@@ -1,0 +1,14 @@
+"""Session defaults that do not need a running JVM."""
+
+from __future__ import annotations
+
+import os
+
+from nvd2mysqlloader_spark.session import default_cpus
+
+
+def test_default_cpus_follows_affinity_unless_overridden(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3

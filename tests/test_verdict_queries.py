@@ -144,3 +144,19 @@ def test_multiset_diff_count_matches_exceptall(spark):
             == want_both(x, y)
         assert multiset_diff_count(x, y, "d", one_way=True) \
             .collect()[0]["d"] == want_one(x, y)
+
+
+def test_multiset_diff_count_input_named_like_its_helpers(spark):
+    """Input columns named like the diff's own helper columns (__sgn,
+    __d, and the first fallback names) must not change the count."""
+    from nvd2mysqlloader_spark.plans._helpers import multiset_diff_count
+
+    schema = "__sgn long, __d long, ___sgn long, ___d long"
+    a = spark.createDataFrame([(1, 1, 1, 1), (1, 1, 1, 1), (2, 5, 0, 0)],
+                              schema)
+    b = spark.createDataFrame([(1, 1, 1, 1), (3, -1, 0, 0)], schema)
+    both = a.exceptAll(b).unionAll(b.exceptAll(a)).count()
+    assert both == 3
+    assert multiset_diff_count(a, b, "d").collect()[0]["d"] == both
+    assert multiset_diff_count(a, b, "d", one_way=True) \
+        .collect()[0]["d"] == a.exceptAll(b).count() == 2
