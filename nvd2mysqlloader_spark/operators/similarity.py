@@ -202,31 +202,17 @@ def _centroids_from_corpus(corpus: DataFrame, emb_col: str, id_col: str,
     return np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
 
 
-def _centroid_sims(centroids: np.ndarray):
-    """Kernel ``x ↦ (n, nlist) cosine`` of (n, d) vectors against the
-    centroids: the one computation behind list assignment (executor-
-    side, per Arrow batch) and the persisted-index probe set (driver-
-    side, per query batch). A closure, so it pickles by value and
-    Python workers never import this package to run it."""
-    norm_c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-
-    def sims(x: np.ndarray) -> np.ndarray:
-        x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True),
-                        1e-12, None)
-        return x @ norm_c.T
-
-    return sims
-
-
 def _assign_udf(centroids: np.ndarray, top: int = 1):
     """array<float> → int list id(s): argmax cosine against the
     centroid matrix, one numpy matmul per Arrow batch."""
-    sims = _centroid_sims(centroids)
+    norm_c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def assign(embs: pd.Series) -> pd.Series:
         x = np.stack(embs.to_numpy()).astype(np.float64)
-        idx = np.argsort(-sims(x), axis=1)[:, :top]
+        x = x / np.clip(np.linalg.norm(x, axis=1, keepdims=True), 1e-12, None)
+        sims = x @ norm_c.T                          # (batch, nlist)
+        idx = np.argsort(-sims, axis=1)[:, :top]
         return pd.Series([row.astype("int32").tolist() for row in idx])
 
     return assign
@@ -412,10 +398,10 @@ _ADC_SCHEMA = T.StructType([
 def _collect_query_batch(queries: DataFrame, query_id_col: str,
                          emb_col: str, max_queries: int,
                          caller: str) -> tuple[np.ndarray, np.ndarray]:
-    """Bounded driver-side query collection shared by every ADC path
-    and the IVF index probe: (ids, L2-normalized float64 matrix).
-    limit(max+1) bounds the transfer even when the check fails — the
-    driver never materializes an unbounded query set."""
+    """Bounded driver-side query collection shared by every ADC path:
+    (ids, L2-normalized float64 matrix). limit(max+1) bounds the
+    transfer even when the check fails — the driver never materializes
+    an unbounded query set."""
     q_rows = (queries.select(query_id_col, emb_col)
               .limit(max_queries + 1).collect())
     if len(q_rows) > max_queries:
@@ -424,8 +410,6 @@ def _collect_query_batch(queries: DataFrame, query_id_col: str,
             "(the query side is driver-collected and closure-broadcast; "
             "chunk the query set or raise max_queries deliberately)")
     q_ids = np.array([r[0] for r in q_rows])
-    if not q_rows:
-        return q_ids, np.empty((0, 0))
     q_mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
     q_mat = q_mat / np.clip(np.linalg.norm(q_mat, axis=1, keepdims=True),
                             1e-12, None)
@@ -776,41 +760,25 @@ def ivf_topk_from_index(index_path: str, queries: DataFrame, k: int = 10,
                         emb_col: str = "embedding",
                         query_id_col: str = "query_id",
                         nprobe: int = 4,
-                        exclude_self: bool = True,
-                        max_queries: int = 65_536) -> DataFrame:
+                        exclude_self: bool = True) -> DataFrame:
     """``ivf_topk`` against a persisted index: identical results to the
-    direct call with the same centroids (same assignment kernel → same
-    probed lists → same exact-cosine ranking). No corpus DataFrame
-    needed: the inverted file carries the vectors.
+    direct call with the same centroids (same assignment → same probed
+    lists → same exact-cosine ranking). No corpus DataFrame needed: the
+    inverted file carries the vectors.
 
-    The index is resolved on the driver, so the only Spark jobs are the
-    bounded query-batch collect (none for a local batch) and the
-    scoring query itself: the centroids are one pyarrow read, the
-    lists the batch probes come from the assignment kernel run over
-    the collected batch, and ``lists`` opens with the schema of one
-    file footer. Those lists become a static ``list_id IN (probed)``
-    partition filter beside the join's dynamic one.
+    The index metadata is read on the driver, so the query batch is
+    evaluated once and the only Spark jobs are the scoring query's:
+    the centroids are one pyarrow read, and ``lists`` opens with the
+    schema of one file footer instead of a schema-inference job.
 
-    Scan fraction: a batch of Q queries reads the UNION of its probed
-    lists, about 1 − (1 − nprobe/nlist)^Q of them — 0.96 for Q=50 at
-    nprobe/nlist = 4/64 — not nprobe/nlist. Each query still scores
-    only its own nprobe lists; the partition pruning pays off for
-    small or clustered batches."""
+    Scan fraction: the join's dynamic partition pruning reads the
+    UNION of the batch's probed lists, about 1 − (1 − nprobe/nlist)^Q
+    of them for Q queries — 0.96 for Q=50 at nprobe/nlist = 4/64 — not
+    nprobe/nlist. Each query still scores only its own nprobe lists."""
     spark = queries.sparkSession
     cents = _read_centroids(f"{index_path}/centroids")
     if cents is None:
         raise ValueError(f"ivf_topk_from_index: no index at {index_path}")
-    _, q_mat = _collect_query_batch(queries, query_id_col, emb_col,
-                                    max_queries, "ivf_topk_from_index")
-    probed: list[int] = []
-    if len(q_mat):
-        sims = _centroid_sims(cents)(q_mat)
-        top = min(nprobe, len(cents))
-        kth = -np.partition(-sims, top - 1, axis=1)[:, top - 1:top]
-        # the executors score differently-shaped batches, so BLAS may
-        # round their sims differently in the last bits: the margin
-        # keeps this filter a superset of the lists they probe
-        probed = np.nonzero((sims >= kth - 1e-9).any(axis=0))[0].tolist()
     ldir = f"{index_path}/lists"
     schema = _footer_schema(ldir)
     reader = (spark.read if schema is None
@@ -818,8 +786,7 @@ def ivf_topk_from_index(index_path: str, queries: DataFrame, k: int = 10,
     q_probe = (queries.select(query_id_col, F.col(emb_col).alias("q_emb"),
                               F.explode(_assign_udf(cents, nprobe)(emb_col))
                               .alias("list_id")))
-    scored = (reader.parquet(ldir).filter(F.col("list_id").isin(probed))
-              .join(F.broadcast(q_probe), "list_id"))
+    scored = reader.parquet(ldir).join(F.broadcast(q_probe), "list_id")
     if exclude_self:
         scored = scored.filter(F.col(id_col) != F.col(query_id_col))
     scored = scored.select(

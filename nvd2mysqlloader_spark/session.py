@@ -1,7 +1,8 @@
 """SparkSession factory.
 
 Tuned for the test harness (local[N], single JVM) while keeping every
-setting cluster-valid: AQE on (runtime re-planning, skew-join splitting,
+setting but one cluster-valid (the driver-side partition listing, which
+only pays off in local mode; see its comment): AQE on (runtime re-planning, skew-join splitting,
 partition coalescing), shuffle partitions sized to cores locally (on a
 real cluster AQE coalesces from a higher initial number), UTC session
 timezone so timestamp semantics match the DuckDB oracle, and Arrow
@@ -63,7 +64,9 @@ def get_spark(app_name: str = "nvd2mysqlloader_spark",
         # disk, so it only adds scheduling. On a 4-core host the
         # listing job cost 0.3-0.7 s per read of a 64-list IVF index,
         # and a banded-signature probe over 5,120 bucket dirs fell from
-        # 3.4 s to 2.0 s without it.
+        # 3.4 s to 2.0 s without it. This depends on local[N]: on a
+        # cluster over remote storage, thousands of dirs listed serially
+        # on the driver are the slow case, so drop this setting there.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
                 str(2**31 - 1))
     )

@@ -638,26 +638,19 @@ def test_ivf_index_probe_matches_direct(spark, tmp_path):
 
 def test_ivf_index_probe_resolves_metadata_on_driver(spark, tmp_path):
     """The persisted-index probe reads its metadata on the driver: at
-    nlist=64 (past Spark's 32-dir parallel-listing default) neither
-    building nor running the probe schedules a listing or schema-
-    inference job (both run inside the reader call, whose stages are
-    named "parquet at ...") or a centroid collect (a "collect at"
-    stage from similarity.py). Rows still equal ivf_topk under the
-    same centroids; an empty batch gives an empty, typed result; a
-    missing index raises."""
-    import pandas as pd
-
+    nlist=64 (past Spark's 32-dir parallel-listing default) running
+    the probe schedules no listing or schema-inference job (both run
+    inside the reader call, whose stages are named "parquet at ...")
+    and no centroid collect (a stage called from similarity.py), for a
+    query batch that is itself a Spark scan. Rows still equal ivf_topk
+    under the same centroids; an empty batch gives an empty, typed
+    result; a missing index raises."""
     from nvd2mysqlloader_spark.operators.similarity import (
         ivf_topk, ivf_topk_from_index, write_ivf_index)
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    rows = emb.filter(F.col("vec_id") < 5).select("vec_id",
-                                                  "embedding").collect()
-    # a driver-local batch: collecting it runs no job, so every job
-    # below belongs to the probe itself
-    queries = spark.createDataFrame(pd.DataFrame(
-        {"query_id": [r[0] for r in rows],
-         "embedding": [list(r[1]) for r in rows]}))
+    queries = (emb.filter(F.col("vec_id") < 5)
+               .select(F.col("vec_id").alias("query_id"), "embedding"))
     path = str(tmp_path / "ivf64")
     cents = write_ivf_index(emb, path, nlist=64)
     assert len(cents) == 64
