@@ -708,9 +708,8 @@ def write_ivf_index(corpus: DataFrame, path: str,
       once at build time;
     * ``{path}/lists``: (id, embedding) PARTITIONED BY list_id — the
       corpus vectors clustered by their nearest centroid, so a probe
-      is a PARTITION-PRUNED scan of the lists its queries probe:
-      ~nprobe/nlist of the data for one query, the union of the
-      probed lists for a batch (see ``ivf_topk_from_index``).
+      can be a partition-pruned scan of the lists its queries probe
+      (``ivf_topk_from_index`` does not prune yet; see there).
 
     First call trains/accepts centroids and creates both; later calls
     APPEND the new batch's vectors to their lists using the PERSISTED
@@ -771,10 +770,13 @@ def ivf_topk_from_index(index_path: str, queries: DataFrame, k: int = 10,
     the centroids are one pyarrow read, and ``lists`` opens with the
     schema of one file footer instead of a schema-inference job.
 
-    Scan fraction: the join's dynamic partition pruning reads the
-    UNION of the batch's probed lists, about 1 − (1 − nprobe/nlist)^Q
-    of them for Q queries — 0.96 for Q=50 at nprobe/nlist = 4/64 — not
-    nprobe/nlist. Each query still scores only its own nprobe lists."""
+    Scan fraction: every call reads ALL nlist lists. Spark plans the
+    join's dynamic-partition-pruning filter as a constant true
+    (``dynamicpruningexpression(true)``), so no list is skipped, even
+    for one query. Each query still scores only its own nprobe lists.
+    A pruned scan would read the UNION of the batch's probed lists,
+    about 1 − (1 − nprobe/nlist)^Q of them for Q queries (0.96 for
+    Q=50 at nprobe/nlist = 4/64), not nprobe/nlist."""
     spark = queries.sparkSession
     cents = _read_centroids(f"{index_path}/centroids")
     if cents is None:

@@ -429,12 +429,13 @@ def ann_topk_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_IDX_ORACLE,
     doc=(
         "IVF ANN against the PERSISTED inverted file (write_ivf_index "
-        "+ ivf_topk_from_index): the probe is a partition-pruned read "
-        "of the UNION of the batch's probed lists — about "
-        "1-(1-nprobe/nlist)^Q of them for Q queries, not nprobe/nlist "
-        "— and must equal the direct ivf_topk under the same "
-        "centroids exactly, pinned TRUE beside DuckDB's corpus-count "
-        "anchor."
+        "+ ivf_topk_from_index): the probe must equal the direct "
+        "ivf_topk under the same centroids exactly, pinned TRUE beside "
+        "DuckDB's corpus-count anchor. It reads every list today (its "
+        "dynamic pruning filter is planned as a constant true); a "
+        "pruned read would cover the UNION of the batch's probed lists "
+        "— about 1-(1-nprobe/nlist)^Q of them for Q queries, not "
+        "nprobe/nlist."
     ),
 )
 def ann_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
